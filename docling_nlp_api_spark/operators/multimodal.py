@@ -1556,8 +1556,8 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
         # nullable: a payload wav_pcm_samples can't decode (non-PCM,
-        # 16-bit, corrupt) emits ONE row with NULL features — the doc
-        # stays visible downstream (same degradation rule as images)
+        # not 8- or 16-bit, corrupt) emits ONE row with NULL features — the
+        # doc stays visible downstream (same degradation rule as images)
         T.StructField("n_samples", T.LongType(), True),
         T.StructField("duration_ms", T.LongType(), True),
         T.StructField("mean_level", T.DoubleType(), True),
@@ -1569,10 +1569,12 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 
 def extract_audio_features(media: DataFrame) -> DataFrame:
     """REAL audio feature extraction over mapInPandas (the audio twin of
-    resize_images): decode the WAV data chunk as 8-bit PCM and compute
-    the features a speech-data curation pass gates on — sample count,
-    duration, DC level (mean of raw 0-255 levels), RMS amplitude around
-    the 128 bias, and peak absolute amplitude. All sums are exact int64
+    resize_images): decode the WAV data chunk as 8-bit or 16-bit PCM
+    (wav_pcm_samples) and compute the features a speech-data curation
+    pass gates on — sample count, duration, DC level (mean of the raw
+    sample values: 0-255 for 8-bit, signed for 16-bit), RMS amplitude
+    around the format's bias (128 for 8-bit, 0 for 16-bit), and peak
+    absolute amplitude. All sums are exact int64
     (order-free by construction); the two emitted doubles are EXACT —
     one correctly-rounded division (and sqrt) of exact integers, so the
     oracle (mm_audio_features: a generate_series ramp rebuilt with the

@@ -5,10 +5,9 @@ Layout (Iceberg in production; partitioned parquet + checkpoint dir in the
 sandbox — same commit protocol):
 
     <out>/extracted/part_id=K/*.parquet     output, hash-partitioned by doc_id
-    <out>/_checkpoints/*.parquet            (run_id, partition_id, status,
-                                             rows_in, rows_out, started_at,
-                                             committed_at)
-    <out>/_metrics/*.parquet                per-partition docs/spans/wall_sec
+    <out>/_checkpoints/*.parquet            the commit record: one row per
+                                            committed partition, with its
+                                            metrics (schema.CHECKPOINT_SCHEMA)
     <out>/_staged/part_id=K/*.parquet       optional (stage_input=True): the
                                             input restaged by part_id so
                                             batch/resume scans prune to
@@ -19,10 +18,11 @@ sandbox — same commit protocol):
 Commit protocol (mirrors Iceberg MERGE semantics with plain files):
 1. pending = all partition ids LEFT ANTI JOIN committed checkpoint rows
 2. per batch of partitions: dynamic-partition-overwrite the output dirs
-   (idempotent on re-run of an uncommitted partition), then append
-   checkpoint + metrics rows.
-3. a crash between (2a) and (2b) re-processes that batch only; committed
-   partitions are never touched again -> no double-counted metrics.
+   (idempotent on re-run of an uncommitted partition), then ONE append of
+   the batch's checkpoint rows, which carry its metrics, commits it.
+3. a crash before that append returns re-processes that batch only;
+   committed partitions, and the metrics committed with them, are never
+   touched again -> no lost or double-counted metrics.
 
 Skew (mega-docs): docs with size(spans) > MEGA_SPAN_THRESHOLD are routed
 through a dedicated pass that spreads one doc per task; the Arrow batch cap
@@ -46,7 +46,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import CHECKPOINT_SCHEMA, METRICS_SCHEMA
+from ..schema import CHECKPOINT_SCHEMA
 from ..spec import MEGA_SPAN_THRESHOLD
 from ..operators.extract import extract
 
@@ -69,23 +69,27 @@ class ExtractionPipeline:
         self.stage_input = stage_input
         self.extracted_dir = os.path.join(out_dir, "extracted")
         self.ckpt_dir = os.path.join(out_dir, "_checkpoints")
-        self.metrics_dir = os.path.join(out_dir, "_metrics")
         self.staged_dir = os.path.join(out_dir, "_staged")
 
     # -- checkpoint table ---------------------------------------------------
-    def committed_partitions(self) -> set[int]:
+    def _committed_rows(self) -> DataFrame:
         # Hadoop-FS existence check, NOT os.path.isdir: with an
         # hdfs://s3a:// out_dir (the documented cluster invocation) the
         # local check is always False, which would silently disable
         # exactly-once resume — every re-run would reprocess ALL
-        # partitions and append duplicate checkpoint + metrics rows.
+        # partitions and append duplicate checkpoint rows.
         from ..session import fs_exists
 
         if not fs_exists(self.spark, self.ckpt_dir):
-            return set()
+            # nothing committed yet; an empty RDD, unlike [], runs no Spark job
+            return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), CHECKPOINT_SCHEMA)
         df = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.ckpt_dir)
+        return df.filter(F.col("status") == "committed")
+
+    def committed_partitions(self) -> set[int]:
         rows = (
-            df.filter((F.col("run_id") == self.run_id) & (F.col("status") == "committed"))
+            self._committed_rows()
+            .filter(F.col("run_id") == self.run_id)
             .select("partition_id")
             .distinct()
             .collect()
@@ -180,34 +184,25 @@ class ExtractionPipeline:
 
             wall = time.time() - t0
             committed_at = datetime.now(timezone.utc).replace(tzinfo=None)
-            ck_rows, mt_rows = [], []
+            ck_rows = []
             for pid in batch:
                 s = stats.get(pid)
                 i = ins.get(pid)
-                docs_in = int(i["docs_in"]) if i else 0
                 docs_out = int(s["docs"]) if s else 0
                 ck_rows.append(
-                    (self.run_id, pid, "committed", docs_in, docs_out, started_at, committed_at)
-                )
-                mt_rows.append(
                     (
-                        self.run_id,
-                        pid,
-                        docs_in,
-                        docs_out,
+                        self.run_id, pid, "committed",
+                        int(i["docs_in"]) if i else 0, docs_out,
                         int(s["failed"]) if s else 0,
-                        int(i["spans_in"]) if i else 0,
-                        int(s["spans_out"]) if s else 0,
-                        wall / max(len(batch), 1),
+                        int(i["spans_in"]) if i else 0, int(s["spans_out"]) if s else 0,
+                        wall / max(len(batch), 1), started_at, committed_at,
                     )
                 )
                 total_docs += docs_out
+            # the commit point: one append records the batch and its metrics
             spark.createDataFrame(ck_rows, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(self.ckpt_dir)
-            spark.createDataFrame(mt_rows, METRICS_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.metrics_dir)
             done += 1
             if fail_after_batches is not None and done >= fail_after_batches:
                 raise RuntimeError(f"injected failure after {done} batches")
@@ -345,7 +340,11 @@ class ExtractionPipeline:
         return self.spark.read.parquet(self.extracted_dir)
 
     def read_metrics(self) -> DataFrame:
-        return self.spark.read.schema(METRICS_SCHEMA).parquet(self.metrics_dir)
+        """Per-partition metrics: a projection of the committed checkpoint rows."""
+        return self._committed_rows().select(
+            "run_id", "partition_id", "docs_in", "docs_out", "docs_failed",
+            "spans_in", "spans_out", "wall_sec",
+        )
 
 
 def new_run_id() -> str:

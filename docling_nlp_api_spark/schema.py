@@ -77,27 +77,20 @@ KERNEL_RESULT_STRUCT = T.StructType(
     ]
 )
 
+# one row per committed partition: the commit record carries its own metrics,
+# so a batch commits with a single append (plans/pipeline.py)
 CHECKPOINT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
         T.StructField("partition_id", T.IntegerType(), False),
         T.StructField("status", T.StringType(), False),
-        T.StructField("rows_in", T.LongType(), False),
-        T.StructField("rows_out", T.LongType(), False),
-        T.StructField("started_at", T.TimestampType(), False),
-        T.StructField("committed_at", T.TimestampType(), True),
-    ]
-)
-
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
         T.StructField("docs_in", T.LongType(), False),
         T.StructField("docs_out", T.LongType(), False),
         T.StructField("docs_failed", T.LongType(), False),
         T.StructField("spans_in", T.LongType(), False),
         T.StructField("spans_out", T.LongType(), False),
         T.StructField("wall_sec", T.DoubleType(), False),
+        T.StructField("started_at", T.TimestampType(), False),
+        T.StructField("committed_at", T.TimestampType(), True),
     ]
 )

@@ -44,7 +44,10 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", help="spans table path (parquet dir)")
     p.add_argument("--tier", help="synthetic tier instead of --input (e.g. sf0.01)")
-    p.add_argument("--output", required=True, help="output root (extracted/_checkpoints/_metrics)")
+    p.add_argument(
+        "--output", required=True,
+        help="output root (extracted/ output, _checkpoints/ commit + metrics rows)",
+    )
     p.add_argument("--run-id", default="run0")
     p.add_argument("--partitions", type=int, default=64, help="logical commit partitions")
     p.add_argument("--batch-size", type=int, default=16, help="partitions per commit batch")

@@ -86,6 +86,19 @@ def test_filename_fallbacks():
     assert filename_from_headers('inline; filename="n.pdf"', "http://h/x") == "n.pdf"
 
 
+def test_content_disposition_cannot_leave_landing_dir():
+    cd = 'attachment; filename="a/../b\n.pdf"'
+    assert filename_from_headers(cd, "http://h/x") == "b.pdf"
+    # nothing left after sanitising: fall back to the URL basename
+    assert filename_from_headers('attachment; filename="dir/"', "http://h/x.txt") == "x.txt"
+
+
+def test_non_http_scheme_is_error_row(tmp_path):
+    row = fetch_one("file:///etc/hostname", str(tmp_path))
+    assert row["path"] is None and "unsupported URL scheme 'file'" in row["error"]
+    assert os.listdir(tmp_path) == []
+
+
 def test_content_length_preabort(server, tmp_path):
     _Handler.ROUTES["/big.bin"] = {"body": b"y" * 100, "lie_length": 10**9}
     row = fetch_one(f"{server}/big.bin", str(tmp_path), max_bytes=1000)

@@ -1,8 +1,12 @@
 """Checkpoint/resume semantics (north rule, SURVEY §5.2(4)):
 crash mid-run -> re-run -> identical final table, no double-counted metrics."""
 
+import shutil
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from docling_nlp_api_spark.datagen import spans_df
 from docling_nlp_api_spark.plans.pipeline import ExtractionPipeline
@@ -220,3 +224,116 @@ def test_staged_legacy_plan_marker_migrates(spark, tmp_path, input_df):
     )
     assert p2.run(input_df)["batches"] == 0  # resumed, not restaged
     assert marker.read_text().startswith(f"{N_PARTS} content:")  # migrated
+
+
+# -- crash at every commit step ---------------------------------------------
+# A crash can land after any parquet write the pipeline issues. The writes
+# are counted on a clean reference run, then each one in turn is followed by
+# a crash and a resume in a fresh pipeline; every resumed run must end with
+# the reference output and exactly one metrics row per partition.
+
+CRASH_BATCH = 4  # 2 commit batches
+_real_parquet = DataFrameWriter.parquet
+
+
+class _InjectedCrash(Exception):
+    pass
+
+
+def _run_with_write_hook(spark, out, docs, hook):
+    """Run a fresh pipeline with every DataFrameWriter.parquet call routed
+    through `hook(writer, path, *args, **kwargs)`."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", hook)
+        ExtractionPipeline(spark, out, n_partitions=N_PARTS, batch_size=CRASH_BATCH).run(docs)
+
+
+@pytest.fixture(scope="module")
+def crash_reference(spark, tmp_path_factory):
+    """Reference run for the crash tests: its input, output signature and
+    the path of each parquet write it issues, in order."""
+    docs = spans_df(spark, N_DOCS).cache()
+    out = str(tmp_path_factory.mktemp("crash_ref"))
+    paths = []
+
+    def record(writer, path, *args, **kwargs):
+        _real_parquet(writer, path, *args, **kwargs)
+        paths.append(path)
+
+    _run_with_write_hook(spark, out, docs, record)
+    sig = _signature(ExtractionPipeline(spark, out).read_output())
+    assert len(sig) == N_DOCS
+    yield docs, sig, paths
+    docs.unpersist()
+
+
+def _assert_resumes_to_reference(spark, out, docs, ref_sig):
+    p = ExtractionPipeline(spark, out, n_partitions=N_PARTS, batch_size=CRASH_BATCH)
+    assert p.run(docs)["partitions_done"] == N_PARTS
+    assert _signature(p.read_output()) == ref_sig
+    m = p.read_metrics()
+    per_part = sorted(r["partition_id"] for r in m.select("partition_id").collect())
+    assert per_part == list(range(N_PARTS))
+    tot = m.agg(F.sum("docs_in").alias("di"), F.sum("docs_out").alias("do")).first()
+    assert (tot["di"], tot["do"]) == (N_DOCS, N_DOCS)
+
+
+def test_crash_after_every_write_resumes_exactly_once(spark, tmp_path, crash_reference):
+    docs, ref_sig, paths = crash_reference
+    for k in range(1, len(paths) + 1):
+        n_writes = [0]
+
+        def crash_after_k(writer, path, *args, **kwargs):
+            _real_parquet(writer, path, *args, **kwargs)
+            n_writes[0] += 1
+            if n_writes[0] == k:
+                raise _InjectedCrash(f"after write {k} of {len(paths)}: {path}")
+
+        out = str(tmp_path / f"after{k}")
+        with pytest.raises(_InjectedCrash):
+            _run_with_write_hook(spark, out, docs, crash_after_k)
+        _assert_resumes_to_reference(spark, out, docs, ref_sig)
+
+
+def test_crash_inside_commit_append_ignores_attempt_file(spark, tmp_path, crash_reference):
+    """A job killed inside the checkpoint append leaves its task output
+    under _checkpoints/_temporary/ without committing it. Those rows name
+    the batch's partitions as committed; the reader must skip them, so the
+    batch stays pending and resume redoes it."""
+    docs, ref_sig, paths = crash_reference
+    commits = [k for k, path in enumerate(paths, 1) if path.endswith("_checkpoints")]
+    assert commits
+    for b, k in enumerate(commits):
+        n_writes = [0]
+        attempt_out = tmp_path / f"attempt{k}"
+
+        def crash_inside_k(writer, path, *args, **kwargs):
+            n_writes[0] += 1
+            if n_writes[0] != k:
+                return _real_parquet(writer, path, *args, **kwargs)
+            _real_parquet(writer, str(attempt_out), *args, **kwargs)
+            attempt = Path(path) / "_temporary" / "0" / "_temporary" / "attempt_0_m_000000_0"
+            attempt.mkdir(parents=True)
+            for f in attempt_out.glob("part-*"):
+                shutil.copy(f, attempt / f.name)
+            raise _InjectedCrash(f"inside write {k}: {path}")
+
+        out = str(tmp_path / f"inside{k}")
+        with pytest.raises(_InjectedCrash):
+            _run_with_write_hook(spark, out, docs, crash_inside_k)
+        assert list(Path(out, "_checkpoints", "_temporary").rglob("part-*"))
+        crashed = ExtractionPipeline(spark, out, n_partitions=N_PARTS, batch_size=CRASH_BATCH)
+        assert len(crashed.committed_partitions()) == b * CRASH_BATCH
+        _assert_resumes_to_reference(spark, out, docs, ref_sig)
+
+
+def test_a12_pipeline_metrics_contract(spark):
+    from docling_nlp_api_spark.catalog import QUERIES
+
+    df = QUERIES["a12_pipeline_metrics"](spark, "")
+    assert df.columns == [
+        "run_id", "partition_id", "docs_in", "docs_out", "docs_failed", "spans_in", "spans_out",
+    ]
+    rows = df.collect()
+    assert sorted(r["partition_id"] for r in rows) == list(range(8))
+    assert sum(r["docs_in"] for r in rows) == 500

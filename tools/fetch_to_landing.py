@@ -13,8 +13,11 @@ job only ever scans storage. Per-URL contract kept from the reference:
 - size guard BEFORE the body via Content-Length when the server sends
   one, and IN-FLIGHT while streaming (a lying/absent Content-Length still
   aborts at max_bytes and removes the partial file);
-- filename from the Content-Disposition header when present, else the
-  URL path basename, else "downloaded_file";
+- http and https URLs only: any other scheme is an error row, fetched
+  nothing;
+- filename from the Content-Disposition header when present (its last
+  path component, control characters dropped), else the URL path
+  basename, else "downloaded_file";
 - landing name "url_download_{md5(url)[:8]}_{filename}" — the same
   hash-prefix collision guard as the upload path (S1);
 - one bad URL is an ERROR ROW in the returned manifest, never an
@@ -29,7 +32,9 @@ import hashlib
 import json
 import os
 import sys
+import unicodedata
 import urllib.error
+import urllib.parse
 import urllib.request
 
 CHUNK_BYTES = 8192
@@ -40,9 +45,14 @@ URL_TIMEOUT_S = 30  # reference config.py:28
 def filename_from_headers(content_disposition: str | None, url: str) -> str:
     """Reference get_filename_from_response: Content-Disposition's
     filename= (quotes stripped) wins; else the URL path basename; else
-    the fixed fallback."""
+    the fixed fallback. The header value is server-controlled, so only its
+    last path component is kept, without control characters: a crafted
+    name cannot point outside the landing dir."""
     if content_disposition and "filename=" in content_disposition:
-        return content_disposition.split("filename=")[1].strip('"')
+        raw = os.path.basename(content_disposition.split("filename=")[1].strip('"'))
+        name = "".join(c for c in raw if unicodedata.category(c) != "Cc")
+        if name:
+            return name
     path = url.split("?", 1)[0].split("#", 1)[0]
     base = path.rstrip("/").rsplit("/", 1)[-1]
     # scheme-only / host-only URLs leave the netloc here; treat a value
@@ -65,6 +75,11 @@ def fetch_one(
     os.makedirs(landing_dir, exist_ok=True)
     dst = part = None
     try:
+        # urlopen also serves file:// (and ftp://): without this check a
+        # manifest URL could copy local files into the landing dir
+        scheme = urllib.parse.urlsplit(url).scheme
+        if scheme not in ("http", "https"):
+            raise ValueError(f"unsupported URL scheme {scheme!r}: only http and https")
         req = urllib.request.Request(url, headers={"User-Agent": "fetch-to-landing/1"})
         with urllib.request.urlopen(req, timeout=timeout) as resp:
             clen = resp.headers.get("Content-Length")
