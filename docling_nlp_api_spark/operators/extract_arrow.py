@@ -490,7 +490,7 @@ def extract_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
 # Memory bound for one kernel invocation, in SPANS not docs: working memory
 # is proportional to the batch's total span count, so a doc-count batch cap
 # (arrow.maxRecordsPerBatch = 1024) alone cannot bound it — a batch can pack
-# multiple >MEGA_SPAN_THRESHOLD mega-docs. 64k spans holds one 50k-span mega
+# several mega-docs of 10k+ spans. 64k spans holds one 50k-span mega
 # doc alone while letting typical ~30-span docs batch ~1000 wide. A single
 # doc is never split (span order is per-doc); a doc larger than the budget
 # becomes its own slice.

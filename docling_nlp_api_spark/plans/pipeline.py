@@ -24,11 +24,13 @@ Commit protocol (mirrors Iceberg MERGE semantics with plain files):
    committed partitions, and the metrics committed with them, are never
    touched again -> no lost or double-counted metrics.
 
-Skew (mega-docs): docs with size(spans) > MEGA_SPAN_THRESHOLD are routed
-through a dedicated pass that spreads one doc per task; the Arrow batch cap
-(session.py) bounds per-batch memory for the rest. At cluster scale the
-same split becomes a salted repartition — a doc is never split (span order
-is per-doc), only re-balanced.
+Single pass: each commit batch is one Spark job that scans the batch's
+partitions, extracts and writes the output, with two Observations on that
+plan counting docs and spans per partition on the way in and out; the
+checkpoint append is the only other job. There is no skew split: a
+mega-doc stays in its scan task, and extract_arrow.BATCH_SPAN_BUDGET
+bounds the spans of every kernel call, so its memory is bounded without a
+dedicated pass (a doc is never split — span order is per-doc).
 
 Reference anchor: the reference absorbs per-document failures into data
 rather than failing the request (docling_service.py:82-91); this pipeline
@@ -42,13 +44,25 @@ import time
 import uuid
 from datetime import datetime, timezone
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import CHECKPOINT_SCHEMA
-from ..spec import MEGA_SPAN_THRESHOLD
 from ..operators.extract import extract
+
+# the per-partition metrics a commit batch observes (CHECKPOINT_SCHEMA columns)
+_METRICS = ("docs_in", "docs_out", "docs_failed", "spans_in", "spans_out")
+
+
+def _sums_by_part(batch: list[int], **metrics: Column) -> list[Column]:
+    """One conditional sum per (metric, partition id of the batch), named
+    `<metric>_<partition id>`: the aggregates an Observation collects."""
+    return [
+        F.sum(F.when(F.col("part_id") == pid, col)).alias(f"{name}_{pid}")
+        for name, col in metrics.items()
+        for pid in batch
+    ]
 
 
 class ExtractionPipeline:
@@ -108,6 +122,9 @@ class ExtractionPipeline:
         summary dict. `fail_after_batches` injects a crash (tests)."""
         spark = self.spark
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # part_id is a pure function of doc_id: computed on the input to pick
+        # a batch, recomputed on the extract output to partition the write
+        part_col = F.pmod(F.xxhash64("doc_id"), F.lit(self.n_partitions)).cast("int")
 
         if self.stage_input:
             src = self._staged_src(input_df)
@@ -118,10 +135,7 @@ class ExtractionPipeline:
             # (Iceberg `bucket(N, doc_id)` — the production layout, where
             # the filter becomes partition pruning for free); for a flat
             # source at scale, pass stage_input=True.
-            src = input_df.withColumn(
-                "part_id",
-                F.pmod(F.xxhash64("doc_id"), F.lit(self.n_partitions)).cast("int"),
-            )
+            src = input_df.withColumn("part_id", part_col)
 
         pending = self.pending_partitions()
         batches = [
@@ -129,78 +143,53 @@ class ExtractionPipeline:
         ]
         done = 0
         total_docs = 0
-        for bi, batch in enumerate(batches):
+        for batch in batches:
             t0 = time.time()
-            started_at = datetime.now(timezone.utc).replace(tzinfo=None)
-            chunk = src.filter(F.col("part_id").isin(batch))
-
-            # skew split: mega-docs one-per-task, normal docs hash-balanced
-            is_mega = F.size("spans") > MEGA_SPAN_THRESHOLD
-            normal = chunk.filter(~is_mega)
-            mega = chunk.filter(is_mega)
-
-            # part_id is a pure function of doc_id — recompute it on the
-            # extract output instead of joining back to the input (the join
-            # was a full shuffle of the extracted spans per commit batch)
-            part_col = F.pmod(F.xxhash64("doc_id"), F.lit(self.n_partitions)).cast("int")
-            ext_n = extract(normal.repartition(max(len(batch) * 2, 2), "doc_id")).withColumn(
-                "part_id", part_col
+            started_at = datetime.now(timezone.utc)
+            # the metrics are observed in the write's own job; both observed
+            # nodes sit in its result stage (no shuffle anywhere in the plan),
+            # whose accumulator updates Spark applies exactly once
+            o_in, o_out = Observation(), Observation()
+            chunk = src.filter(F.col("part_id").isin(batch)).observe(
+                o_in, *_sums_by_part(batch, docs_in=F.lit(1), spans_in=F.size("spans"))
             )
-            ext_m = extract(mega.repartition(8)).withColumn("part_id", part_col)
-            result = ext_n.unionByName(ext_m)
-
-            # one pass: write output + collect per-partition metrics.
-            # DISK_ONLY: a commit batch of extracted docs is gigabytes at
-            # the 50x tier — deserialized in-heap caching evicts nothing
-            # fast enough and OOMs the executors (sf5 run, 16g heap);
-            # disk blocks cost one serialization the parquet write needs
-            # anyway and keep task heap for the kernel
-            result = result.persist(StorageLevel.DISK_ONLY)
-            try:
-                (
-                    result.withColumn("n_spans_out", F.size("spans"))
-                    .write.mode("overwrite")
-                    .partitionBy("part_id")
-                    .parquet(self.extracted_dir)
+            (
+                extract(chunk)
+                .withColumn("part_id", part_col)
+                .withColumn("n_spans_out", F.size("spans"))
+                .observe(
+                    o_out,
+                    *_sums_by_part(
+                        batch,
+                        docs_out=F.lit(1),
+                        docs_failed=(F.col("status") == "failed").cast("int"),
+                        spans_out=F.col("n_spans_out"),
+                    ),
                 )
-                stats = {
-                    r["part_id"]: r
-                    for r in result.groupBy("part_id")
-                    .agg(
-                        F.count("*").alias("docs"),
-                        F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("failed"),
-                        F.sum(F.size("spans")).alias("spans_out"),
-                    )
-                    .collect()
-                }
-                ins = {
-                    r["part_id"]: r
-                    for r in chunk.groupBy("part_id")
-                    .agg(F.count("*").alias("docs_in"), F.sum(F.size("spans")).alias("spans_in"))
-                    .collect()
-                }
-            finally:
-                result.unpersist()
+                .write.mode("overwrite")
+                .partitionBy("part_id")
+                .parquet(self.extracted_dir)
+            )
+            # a sum over no rows is None: a partition without docs counts 0
+            sums = {k: int(v or 0) for k, v in {**o_in.get, **o_out.get}.items()}
 
             wall = time.time() - t0
-            committed_at = datetime.now(timezone.utc).replace(tzinfo=None)
-            ck_rows = []
-            for pid in batch:
-                s = stats.get(pid)
-                i = ins.get(pid)
-                docs_out = int(s["docs"]) if s else 0
-                ck_rows.append(
-                    (
-                        self.run_id, pid, "committed",
-                        int(i["docs_in"]) if i else 0, docs_out,
-                        int(s["failed"]) if s else 0,
-                        int(i["spans_in"]) if i else 0, int(s["spans_out"]) if s else 0,
-                        wall / max(len(batch), 1), started_at, committed_at,
-                    )
-                )
-                total_docs += docs_out
-            # the commit point: one append records the batch and its metrics
-            spark.createDataFrame(ck_rows, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
+            committed_at = datetime.now(timezone.utc)
+            rows = [
+                {
+                    "run_id": self.run_id, "partition_id": pid, "status": "committed",
+                    **{m: sums[f"{m}_{pid}"] for m in _METRICS},
+                    "wall_sec": wall / len(batch),
+                    "started_at": started_at, "committed_at": committed_at,
+                }
+                for pid in batch
+            ]
+            total_docs += sum(r["docs_out"] for r in rows)
+            # the commit point: one append records the batch and its metrics.
+            # Arrow rows reach the JVM without a Python worker, and the
+            # tz-aware datetimes stay UTC whatever the process's local zone
+            ck = pa.Table.from_pylist(rows).select(CHECKPOINT_SCHEMA.names)
+            spark.createDataFrame(ck, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(self.ckpt_dir)
             done += 1
@@ -210,7 +199,8 @@ class ExtractionPipeline:
         return {
             "run_id": self.run_id,
             "batches": done,
-            "partitions_done": len(self.committed_partitions()),
+            # committed at start plus every pending one this run committed
+            "partitions_done": self.n_partitions,
             "docs_out": total_docs,
         }
 

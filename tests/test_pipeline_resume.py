@@ -2,6 +2,9 @@
 crash mid-run -> re-run -> identical final table, no double-counted metrics."""
 
 import shutil
+import time
+import uuid
+from datetime import datetime, timezone
 from pathlib import Path
 
 import pytest
@@ -10,6 +13,7 @@ from pyspark.sql.readwriter import DataFrameWriter
 
 from docling_nlp_api_spark.datagen import spans_df
 from docling_nlp_api_spark.plans.pipeline import ExtractionPipeline
+from docling_nlp_api_spark.schema import CHECKPOINT_SCHEMA, DOCUMENTS_SPANS_SCHEMA
 
 N_DOCS = 300
 N_PARTS = 8
@@ -337,3 +341,107 @@ def test_a12_pipeline_metrics_contract(spark):
     rows = df.collect()
     assert sorted(r["partition_id"] for r in rows) == list(range(8))
     assert sum(r["docs_in"] for r in rows) == 500
+
+
+# -- single-pass commit ------------------------------------------------------
+
+
+def test_single_pass_issues_two_jobs_per_batch(spark, tmp_path):
+    """A commit batch is one job that scans, extracts, writes and observes
+    the metrics, plus one job for the checkpoint append."""
+    sc = spark.sparkContext
+    group = f"single-pass-{uuid.uuid4().hex}"
+    p = ExtractionPipeline(spark, str(tmp_path / "jobs"), n_partitions=N_PARTS, batch_size=CRASH_BATCH)
+    sc.setJobGroup(group, "single-pass job count")
+    try:
+        summary = p.run(spans_df(spark, N_DOCS))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert summary["batches"] == 2
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2 * summary["batches"]
+
+
+def _doc(i, kinds):
+    spans = [
+        {"kind": k, "text": f"doc {i} span {j} has quite enough words to be content", "media_ref": "",
+         "offset": j}
+        for j, k in enumerate(kinds)
+    ]
+    return (f"recount{i}", spans)
+
+
+def test_observed_metrics_equal_independent_recount(spark, tmp_path):
+    """The metrics observed during the write equal a groupBy recount of the
+    input and of the written output, for failed docs and for partitions of a
+    batch that received no doc."""
+    ok = [_doc(i, ["title", "p", "p"][: 1 + i % 3]) for i in range(14)]
+    bad = [_doc(i, ["p", "blink"]) for i in range(14, 20)]  # unknown kind -> failed
+    docs = spark.createDataFrame(ok + bad, DOCUMENTS_SPANS_SCHEMA)
+    n_parts = 32  # more partitions than docs: some batches hold empty partitions
+    p = ExtractionPipeline(spark, str(tmp_path / "recount"), n_partitions=n_parts, batch_size=8)
+    assert p.run(docs)["docs_out"] == 20
+
+    part = F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int")
+    zero = {"docs_in": 0, "spans_in": 0, "docs_out": 0, "docs_failed": 0, "spans_out": 0}
+    want = {pid: dict(zero) for pid in range(n_parts)}
+    for r in docs.groupBy(part.alias("pid")).agg(
+        F.count("*").alias("docs_in"), F.sum(F.size("spans")).alias("spans_in")
+    ).collect():
+        want[r["pid"]].update(docs_in=r["docs_in"], spans_in=r["spans_in"])
+    for r in p.read_output().groupBy("part_id").agg(
+        F.count("*").alias("docs_out"),
+        F.sum((F.col("status") == "failed").cast("int")).alias("docs_failed"),
+        F.sum(F.size("spans")).alias("spans_out"),
+    ).collect():
+        want[r["part_id"]].update(
+            docs_out=r["docs_out"], docs_failed=r["docs_failed"], spans_out=r["spans_out"]
+        )
+    got = {r["partition_id"]: {k: r[k] for k in zero} for r in p.read_metrics().collect()}
+    assert got == want
+    assert any(m["docs_in"] == 0 for m in want.values())
+    assert sum(m["docs_failed"] for m in want.values()) == len(bad)
+
+
+def test_empty_input_commits_zero_rows(spark, tmp_path):
+    p = ExtractionPipeline(spark, str(tmp_path / "empty"), n_partitions=4, batch_size=2)
+    summary = p.run(spark.createDataFrame([], DOCUMENTS_SPANS_SCHEMA))
+    assert summary["docs_out"] == 0 and summary["partitions_done"] == 4
+    rows = p.read_metrics().collect()
+    assert sorted(r["partition_id"] for r in rows) == [0, 1, 2, 3]
+    for r in rows:
+        assert (r["docs_in"], r["docs_out"], r["docs_failed"], r["spans_in"], r["spans_out"]) == (
+            0, 0, 0, 0, 0,
+        )
+
+
+def test_checkpoint_timestamps_are_utc_in_any_local_zone(spark, tmp_path, monkeypatch):
+    """started_at and committed_at record the UTC instant of the batch even
+    when the Python process runs in another time zone."""
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    docs = spans_df(spark, 40)
+    fmt = "%Y-%m-%d %H:%M:%S.%f"
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        assert time.localtime().tm_gmtoff != 0
+        lo = datetime.now(timezone.utc).strftime(fmt)
+        p = ExtractionPipeline(spark, str(tmp_path / "tz"), n_partitions=4, batch_size=2)
+        p.run(docs)
+        hi = datetime.now(timezone.utc).strftime(fmt)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    # the session zone is UTC, so date_format prints the stored instant in UTC
+    utc = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+    rows = (
+        spark.read.schema(CHECKPOINT_SCHEMA).parquet(p.ckpt_dir)
+        .select(
+            F.date_format("started_at", utc).alias("started"),
+            F.date_format("committed_at", utc).alias("committed"),
+        )
+        .collect()
+    )
+    assert len(rows) == 4
+    for r in rows:
+        assert lo <= r["started"] <= r["committed"] <= hi, (lo, r, hi)

@@ -6,8 +6,8 @@ commit batch, resume with the SAME run_id, and prove:
 
 1. exactly-once: the resumed run processes only the pending partitions
    (committed ones are never touched again), each partition id appears
-   exactly once in the metrics table, and sum(docs_in) over metrics ==
-   the corpus row count (no double counting across the crash);
+   exactly once in the committed checkpoint rows, and sum(docs_in) over
+   them == the corpus row count (no double counting across the crash);
 2. output equality: an order-insensitive corpus checksum (sum of
    per-doc xxhash64 over doc_id/status/spans/metadata) of the pipeline's
    on-disk output equals the checksum of the pure extraction kernel run
