@@ -308,8 +308,10 @@ def kmeans_fit(emb: DataFrame, n_clusters: int = 8, iters: int = 2) -> list[list
     boundary could round differently per partition layout and cascade
     through assignments (the sample_dsir_weights failure mode). 1e12
     scale holds |cluster| < ~9e6 vectors per int64 at unit-norm inputs;
-    a 100 TB fit would drop to 1e9 quantization (same contract, coarser
-    unit) or per-dim DECIMAL sums."""
+    past that the BIGINT sum overflows, and under ANSI mode (the Spark 4
+    default, which get_spark keeps) the fit raises ARITHMETIC_OVERFLOW
+    rather than wrapping. A 100 TB fit would drop to 1e9 quantization
+    (same contract, coarser unit) or per-dim DECIMAL sums."""
     # one shared validity gate for init AND every assignment pass: a
     # NULL/ragged vector would assign to a NULL cluster whose posexplode
     # rows still emit, and the driver-side new[cl] would TypeError on the

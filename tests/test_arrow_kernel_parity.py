@@ -1,18 +1,20 @@
-"""The Arrow-native kernel (extract_arrow) must match the reference
-pandas kernel (extract.extract_batch) span-for-span on every doc shape:
-plain/HTML/PDF flavors, shuffled offsets, mega-docs, unknown kinds,
-hyphen merges, empty spans, empty batches."""
+"""The Arrow kernel (extract_arrow.extract_record_batch) must match the
+pure-Python oracle (oracle.extract.extract_doc) doc-for-doc on every doc
+shape: plain/HTML/PDF flavors, shuffled offsets, mega-docs, unknown kinds,
+hyphen merges, empty spans, empty batches, input without bbox, Unicode
+whitespace and mixed flavors. Compared per doc: the (kind, text,
+media_ref, order) spans, per-span pages and bboxes, status, and the
+metadata map extract() builds from the kernel's counters."""
 
+import copy
 import random
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pytest
 
 from docling_nlp_api_spark.datagen import gen_doc
-from docling_nlp_api_spark.operators.extract import extract_batch
 from docling_nlp_api_spark.operators.extract_arrow import extract_record_batch
+from docling_nlp_api_spark.oracle.extract import extract_doc
 
 SPAN_T = pa.list_(
     pa.struct(
@@ -26,7 +28,7 @@ SPAN_T = pa.list_(
     )
 )
 
-# pre-bbox input shape: both kernels must tolerate spans without the field
+# pre-bbox input shape: the kernel must tolerate spans without the field
 SPAN_T_NOBB = pa.list_(
     pa.struct(
         [
@@ -45,38 +47,43 @@ def to_batch(ids, spans_rows, span_t=SPAN_T):
     )
 
 
-def pandas_ref(spans_rows, with_bbox=True):
-    cols = {}
-    for name, key, dt in [
-        ("k", "kind", object), ("t", "text", object), ("r", "media_ref", object), ("o", "offset", np.int64),
-    ]:
-        cols[name] = pd.Series([np.array([s[key] for s in sp], dtype=dt) for sp in spans_rows])
-    bb = (
-        pd.Series([[s.get("bbox") for s in sp] for sp in spans_rows], dtype=object)
-        if with_bbox
-        else None
-    )
-    return extract_batch(cols["k"], cols["t"], cols["r"], cols["o"], bb)
+def _bool(v):
+    return "true" if v else "false"
 
 
-def assert_parity(ids, spans_rows, span_t=SPAN_T, with_bbox=True):
+def kernel_view(got, i):
+    """Doc i of the kernel output, in the oracle's terms (the metadata map
+    is built the way extract() builds it)."""
+    if got["status"][i] == "failed":
+        metadata = {"error": got["error"][i]}
+        # failed docs carry zeroed counters, never partial ones
+        assert (got["word_count"][i], got["char_count"][i], got["page_count"][i]) == (0, 0, 0)
+        assert not (got["has_images"][i] or got["has_tables"][i])
+    else:
+        metadata = {
+            "word_count": str(got["word_count"][i]),
+            "char_count": str(got["char_count"][i]),
+            "page_count": str(got["page_count"][i]),
+            "has_images": _bool(got["has_images"][i]),
+            "has_tables": _bool(got["has_tables"][i]),
+        }
+    spans = list(zip(got["kinds"][i], got["texts"][i], got["media_refs"][i], got["orders"][i]))
+    return spans, list(got["page_nos"][i]), list(got["bboxes"][i]), got["status"][i], metadata
+
+
+def oracle_view(doc_id, spans):
+    # the oracle annotates span dicts in place (page numbers): hand it a copy
+    exp = extract_doc(doc_id, copy.deepcopy(spans))
+    out = [(s.kind, s.text, s.media_ref, s.order) for s in exp.spans]
+    return out, exp.pages, exp.bboxes, exp.status, exp.metadata
+
+
+def assert_matches_oracle(ids, spans_rows, span_t=SPAN_T):
     got = extract_record_batch(to_batch(ids, spans_rows, span_t)).to_pydict()
-    ref = pandas_ref(spans_rows, with_bbox)
-    for i in range(len(ids)):
-        g = (
-            list(got["kinds"][i]), list(got["texts"][i]), list(got["media_refs"][i]),
-            list(got["orders"][i]), list(got["bboxes"][i]), got["status"][i], got["error"][i],
-            got["word_count"][i], got["char_count"][i], got["has_images"][i], got["has_tables"][i],
-        )
-        r = (
-            list(ref["kinds"].iloc[i]), list(ref["texts"].iloc[i]), list(ref["media_refs"].iloc[i]),
-            [int(x) for x in ref["orders"].iloc[i]],
-            [x if x is None else list(x) for x in ref["bboxes"].iloc[i]],
-            str(ref["status"].iloc[i]), ref["error"].iloc[i],
-            int(ref["word_count"].iloc[i]), int(ref["char_count"].iloc[i]),
-            bool(ref["has_images"].iloc[i]), bool(ref["has_tables"].iloc[i]),
-        )
-        assert g == r, f"doc {ids[i]} diverges: {g} != {r}"
+    assert got["doc_id"] == list(ids)
+    for i, (did, spans) in enumerate(zip(ids, spans_rows)):
+        assert kernel_view(got, i) == oracle_view(did, spans), f"doc {did} diverges"
+    return got
 
 
 @pytest.mark.parametrize("shuffle", [False, True])
@@ -89,7 +96,7 @@ def test_generated_docs(shuffle):
             random.Random(num).shuffle(sp)
         ids.append(did)
         rows.append(sp)
-    assert_parity(ids, rows)
+    assert_matches_oracle(ids, rows)
 
 
 def test_adversarial_docs():
@@ -106,8 +113,15 @@ def test_adversarial_docs():
         "hyphen_tail": [S("body", "end-", "", 0)],
         "ws_only": [S("p", " ", "", 5), S("h1", "T", "", 2)],
         "caption_only": [S("caption", "cap", "", 0)],
+        # a doc's first span opens page 1; later markers count on from it
+        "pageno_first": [
+            S("pageno", "1", "", 0), S("body", "a b", "", 1),
+            S("pageno", "2", "", 2), S("body", "c", "", 3),
+        ],
+        # a failed doc reports no pages even when it has markers
+        "unknown_paged": [S("pageno", "1", "", 0), S("martian", "x", "", 1)],
     }
-    assert_parity(list(cases), list(cases.values()))
+    assert_matches_oracle(list(cases), list(cases.values()))
 
 
 def test_empty_batch():
@@ -124,8 +138,7 @@ def test_no_bbox_input_shape():
         did, sp = gen_doc(num)
         ids.append(did)
         rows.append([{k: s[k] for k in ("kind", "text", "media_ref", "offset")} for s in sp])
-    assert_parity(ids, rows, span_t=SPAN_T_NOBB, with_bbox=False)
-    got = extract_record_batch(to_batch(ids, rows, SPAN_T_NOBB)).to_pydict()
+    got = assert_matches_oracle(ids, rows, span_t=SPAN_T_NOBB)
     assert all(bb is None for doc in got["bboxes"] for bb in doc)
 
 
@@ -136,51 +149,36 @@ def _span(kind, text, off, ref=None):
 def test_unicode_whitespace_word_counts_match_oracle():
     """SPEC pins Python str.split() word semantics. NBSP/ideographic-space
     separated candidate text must classify identically in the oracle and
-    BOTH kernels (the byte-level fast path only covered ASCII whitespace
+    the kernel (the byte-level fast path only covered ASCII whitespace
     before the slow-path fix — an NBSP paragraph was miscounted as one
     word, labelled UNDECIDED, and dropped)."""
-    from docling_nlp_api_spark.oracle.extract import extract_doc
-
-    nbsp_words = " ".join("abcdefgh")          # 8 Python words
-    ideo = "x　y　z w v u t s"               # 8 words, U+3000
+    nbsp_words = "\u00a0".join("abcdefgh")     # 8 Python words, NBSP
+    ideo = "x\u3000y\u3000z w v u t s"        # 8 words, U+3000
     fs = "a\x1cb\x1cc d e f g h"                     # \x1c is Python-space
     docs = {
         "d1": [_span("h1", "T", 0), _span("p", nbsp_words, 1)],
         "d2": [_span("h1", "T", 0), _span("p", ideo, 1)],
         "d3": [_span("h1", "T", 0), _span("p", fs, 1)],
     }
-    for did, spans in docs.items():
-        exp = extract_doc(did, spans)
-        got = extract_record_batch(to_batch([did], [spans])).to_pydict()
-        assert got["status"][0] == exp.status, did
-        assert list(got["kinds"][0]) == [s.kind for s in exp.spans], did
-        assert got["word_count"][0] == int(exp.metadata["word_count"]), did
-        ref = pandas_ref([spans])
-        assert list(ref["kinds"][0]) == [s.kind for s in exp.spans], did
-        # the p span survives as content (>= MIN_CONTENT_WORDS words)
-        assert "p" in got["kinds"][0], did
+    got = assert_matches_oracle(list(docs), list(docs.values()))
+    # the p span survives as content (>= MIN_CONTENT_WORDS words)
+    for i, did in enumerate(docs):
+        assert "p" in got["kinds"][i], did
 
 
 def test_mixed_flavor_pdf_kinds_in_html_doc_match_oracle():
     """FIXTURES declares mixed docs invalid, but both the oracle and the
-    kernels ACCEPT them — so they must agree: a PDF kind inside an
+    kernel ACCEPT them — so they must agree: a PDF kind inside an
     HTML-flavor doc takes the oracle's else-branch (content) instead of
     being silently dropped."""
-    from docling_nlp_api_spark.oracle.extract import extract_doc
-
     spans = [
         _span("p", "one two three four five six seven eight", 0),
         _span("body", "pdf body text here", 1),
         _span("li", "tiny", 2),  # undecided -> smoothing between content
         _span("heading", "section", 3),
     ]
-    exp = extract_doc("dm", spans)
-    exp_seq = [(s.kind, s.text) for s in exp.spans]
-    got = extract_record_batch(to_batch(["dm"], [spans])).to_pydict()
-    assert list(zip(got["kinds"][0], got["texts"][0])) == exp_seq
-    ref = pandas_ref([spans])
-    assert list(zip(ref["kinds"][0], ref["texts"][0])) == exp_seq
-    assert ("body", "pdf body text here") in exp_seq  # oracle keeps it
+    got = assert_matches_oracle(["dm"], [spans])
+    assert ("body", "pdf body text here") in zip(got["kinds"][0], got["texts"][0])
 
 
 def test_null_span_fields_degrade_to_doc_failure_not_crash():

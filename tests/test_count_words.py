@@ -18,7 +18,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from docling_nlp_api_spark.operators.extract import _count_words
+from docling_nlp_api_spark.operators.extract_arrow import _count_words
 
 
 def truth(strings):

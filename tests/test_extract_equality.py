@@ -4,6 +4,8 @@ The BASELINE.json invariant: element-wise equality on
 (kind, text, media_ref, order) per doc, plus status + metadata parity.
 """
 
+import re
+
 import pytest
 
 from docling_nlp_api_spark import datagen
@@ -72,3 +74,43 @@ def test_status_and_metadata_equality(engine_rows):
         got = engine_rows[did]
         assert got["status"] == exp.status, did
         assert dict(got["metadata"]) == exp.metadata, (did, dict(got["metadata"]), exp.metadata)
+
+
+# the BASELINE input_hint span struct: four fields, no bbox
+NO_BBOX_SCHEMA = (
+    "doc_id string, "
+    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
+
+
+def test_no_bbox_input_through_spark(spark):
+    """extract() over input without the optional bbox field: spans,
+    status, metadata and span_pages equal the oracle's, and every
+    span_bboxes entry is null."""
+    fields = ("kind", "text", "media_ref", "offset")
+    docs = [datagen.gen_doc(num) for num in range(60)]
+    rows = [(did, [{k: s[k] for k in fields} for s in spans]) for did, spans in docs]
+    got = {r["doc_id"]: r for r in extract(spark.createDataFrame(rows, NO_BBOX_SCHEMA)).collect()}
+    assert len(got) == len(rows)
+    for did, spans in rows:
+        exp = extract_doc(did, spans)
+        g = got[did]
+        assert [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in g["spans"]] == [
+            (s.kind, s.text, s.media_ref, s.order) for s in exp.spans
+        ], did
+        assert g["status"] == exp.status, did
+        assert dict(g["metadata"]) == exp.metadata, did
+        assert list(g["span_pages"]) == exp.pages, did
+        assert len(g["span_bboxes"]) == len(exp.spans), did
+        assert all(bb is None for bb in g["span_bboxes"]), did
+
+
+def test_plan_runs_one_arrow_kernel(spark):
+    """extract() is one mapInArrow pass: exactly one MapInArrow node in
+    the executed plan and no per-column Python UDF evaluation."""
+    out = extract(datagen.spans_df(spark, 50))
+    out.write.format("noop").mode("overwrite").save()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan

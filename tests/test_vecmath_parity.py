@@ -342,3 +342,16 @@ def test_kmeans_fit_survives_ragged_row(spark, monkeypatch):
         cents = S.kmeans_fit(emb, n_clusters=2, iters=2)
         clean = spark.createDataFrame(rows[:12], "vec_id long, embedding array<float>")
         assert cents == S.kmeans_fit(clean, n_clusters=2, iters=2), tier
+
+
+def test_kmeans_fit_overflow_fails_loudly(spark):
+    """The per-(cluster, dim) pico-unit sum is a BIGINT: 20 components of
+    1e6 sum to 2e19 pico-units, past int64. Under the session's ANSI mode
+    that raises instead of wrapping into a silently wrong centroid."""
+    from pyspark.errors import ArithmeticException
+
+    emb =spark.createDataFrame(
+        [(i, [1e6, 0.5]) for i in range(20)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        S.kmeans_fit(emb, n_clusters=1, iters=1)

@@ -45,7 +45,9 @@ AUDITS: dict[str, tuple[list[str], list[str]]] = {
     "a8_corpus_keywords": (["TakeOrderedAndProject", "HashAggregate"], []),
     "a11_multi_window": (["HashAggregate"], [r"(Exchange[\s\S]*){3,}"]),
     "w1_top_event_types": (["Window"], []),
-    "u1_u3_extract_spans": (["ArrowEvalPython|MapInArrow|PythonUDF"], ["Exchange"]),
+    # extraction: ONE Arrow kernel pass (mapInArrow), never a per-column
+    # Arrow UDF, and zero shuffle
+    "u1_u3_extract_spans": (["MapInArrow"], ["Exchange", "ArrowEvalPython"]),
     # render plane: ONE kernel pass, zero shuffle/join, and the staged
     # Generate barriers (keywords + full-text/splits + page segments)
     # present — if CollapseProject ever eats them, the tokenizer/splitter
